@@ -268,8 +268,8 @@ class ADTContext:
                 walk(kids.apply(i), depth + 1)
 
         walk(plan, 0)
-        return self.spark.createDataFrame(
-            [("Plan with Metrics", "\n".join(lines))], "plan_type string, plan string"
+        return local_frame(
+            self.spark, [("Plan with Metrics", "\n".join(lines))], "plan_type string, plan string"
         )
 
     # -- table registration (reference: listing.rs / deltatable.rs) ------
@@ -322,6 +322,55 @@ def spread(df: DataFrame) -> DataFrame:
 
 #: (applicationId, plan hash) → scan partition count (spread probe)
 _SPREAD_MEMO: dict[tuple[str, int], int] = {}
+
+
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over a table the driver already holds, planned as a
+    ``LocalRelation`` (``LocalTableScan``).
+
+    Why: ``spark.createDataFrame(<list>, schema)`` pickles the rows
+    into a ``PythonRDD``, so every job that scans the table starts
+    Python workers to unpickle a few dozen rows.  Handing Spark a
+    ``pyarrow.Table`` instead keeps the rows in the plan itself (up
+    to ``spark.sql.execution.arrow.localRelationThreshold``) and no
+    Python worker runs.
+
+    ``rows`` is a sequence of tuples or dicts, or an already-built
+    ``pyarrow.Table`` (passed through as is); ``schema`` is a
+    ``StructType`` or a DDL string.  Each row is verified against the
+    schema exactly as the list path does (a None in a non-nullable
+    field or a wrongly typed value raises), and values whose type
+    needs conversion (dates, timestamps, also nested) go through the
+    field's own ``DataType.toInternal`` first — the list path's
+    conversion, so timestamps match under any host time zone.
+
+    The rows become part of the plan and ``semanticHash`` hashes
+    them: a table of unbounded size keeps the RDD path instead.
+    """
+    import pyarrow as pa
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.DataType.fromDDL(schema)
+    if isinstance(rows, pa.Table):
+        return spark.createDataFrame(rows, schema)
+    verify = T._make_type_verifier(schema)
+    names = schema.names
+    cols: list[list] = [[] for _ in names]
+    for row in rows:
+        verify(row)
+        for col, v in zip(cols, [row[n] for n in names] if isinstance(row, dict) else row):
+            col.append(v)
+    arrow_schema = to_arrow_schema(schema)
+    arrays = [
+        pa.array(
+            [f.dataType.toInternal(v) for v in col] if f.dataType.needConversion() else col,
+            type=af.type,
+        )
+        for f, col, af in zip(schema.fields, cols, arrow_schema)
+    ]
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow_schema), schema)
 
 
 def _sf_dir_signature(sf_dir: str) -> tuple:

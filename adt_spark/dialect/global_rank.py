@@ -899,8 +899,15 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
                 return [t() for t in thunks]
             from concurrent.futures import ThreadPoolExecutor
 
+            from pyspark import inheritable_thread_target
+
+            # the pool threads' jobs carry the caller's job group,
+            # description and session tags
+            inherit = inheritable_thread_target(spark)
             with ThreadPoolExecutor(max_workers=min(len(thunks), 8)) as ex:
-                return [f.result() for f in [ex.submit(t) for t in thunks]]
+                return [
+                    f.result() for f in [ex.submit(inherit(t)) for t in thunks]
+                ]
 
         splits_list = _run_parallel(
             [

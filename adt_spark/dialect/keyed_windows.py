@@ -60,11 +60,14 @@ Accepted statement shapes (anything else returns None — a sound
 passthrough, mirroring window_frames' refusal discipline):
 
 - form A: ``SELECT <items> FROM <ident>`` — single plain-identifier
-  source, no WHERE/GROUP/ORDER/JOIN/… tail;
+  source, no WHERE/GROUP/ORDER/JOIN/… tail; an unqualified ``*`` item
+  is emitted as ``<ident>.*`` so it does not expand over the
+  joined-back ``__kw_*`` columns;
 - form B: form A whose source is ``rewrite_window_frames``'s
   dense-rank wrap ``(SELECT *, dense_rank() OVER (PARTITION BY p
   ORDER BY k NULLS LAST) AS __adt_drN FROM <ident>) <alias>`` with the
-  injected column used ONLY inside OVER clauses.
+  injected column used ONLY inside OVER clauses (never as a
+  first/last argument), and no unqualified ``*`` item.
 
 Every window call must share one bare-column PARTITION BY and one
 underlying ORDER BY column (bare, or ``CAST((k) AS <type>)`` as the
@@ -129,6 +132,8 @@ _CAST_KEY_RE = re.compile(
     re.IGNORECASE,
 )
 _SELECT_RE = re.compile(r"^\s*select\s", re.IGNORECASE)
+#: a select item that is an unqualified ``*`` (optionally DISTINCT/ALL)
+_STAR_ITEM_RE = re.compile(r"^(\s*(?:(?:distinct|all)\s+)?)\*(\s*)$", re.IGNORECASE)
 _FROM_RE = re.compile(r"\bfrom\b", re.IGNORECASE)
 _ORD_TAIL_NULLS = re.compile(r"\bnulls\s+(first|last)\s*$", re.IGNORECASE)
 _ORD_TAIL_DIR = re.compile(r"\b(asc|desc)\s*$", re.IGNORECASE)
@@ -273,11 +278,11 @@ def compress_keyed_windows(sql: str) -> str | None:
         if fn in ("first_value", "last_value"):
             if o_txt is None:
                 return None  # unordered first/last is tie-order-dependent
+            # the injected __adt_drN is not a base column: the per-key
+            # partial would reference a column the GROUP BY cannot see
             allowed = set(_FV_KEYWORDS)
             if key_col is not None:
                 allowed.add(key_col.lower())
-            if dr_name is not None:
-                allowed.add(dr_name.lower())
             if idents - allowed:
                 return None
         if fn == "count" and args.strip() != "*" and not args.strip():
@@ -343,6 +348,17 @@ def compress_keyed_windows(sql: str) -> str | None:
         rf"\b{re.escape(dr_name)}\b", _mask_literals(new_items), re.IGNORECASE
     ):
         return None  # injected index used outside OVER — not joined back
+    # a bare top-level ``*`` would also expand over the joined-back
+    # __kw_* columns: pin it to the base table's columns (form B's ``*``
+    # also carried the injected index, which is not joined back — refuse)
+    sel = _split_top_level(new_items)
+    for i, item in enumerate(sel):
+        sm = _STAR_ITEM_RE.match(item)
+        if sm:
+            if dr_name is not None:
+                return None
+            sel[i] = f"{sm.group(1)}{base}.*{sm.group(2)}"
+    new_items = ",".join(sel)
 
     grp = (
         f"SELECT {part_col}, {key_col}, {', '.join(partial_sql)} "

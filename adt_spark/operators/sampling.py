@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from adt_spark.context import local_frame
 from adt_spark.queries import register, tables
 
 #: lang → (hex threshold on md5 prefix, repeat factor).  '40'/256 ≈ 25%
@@ -49,7 +50,7 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan at any scale.
     """
     docs = tables(spark, sf_dir)["documents"]
-    rates = spark.createDataFrame(_MIX, "lang string, thresh string, repeats int")
+    rates = local_frame(spark, _MIX, "lang string, thresh string, repeats int")
     return (
         docs.join(F.broadcast(rates), "lang")
         .filter(
@@ -1429,13 +1430,15 @@ def _assign_range_pids(
 
     Mechanics: split bounds from one seeded sample
     (_sample_split_bounds) become a ≤ n_parts-row BOUNDS TABLE —
-    (pid, lo…, hi…, unbounded flags) — broadcast and interval-joined:
-    row → the unique pid with lo < key ≤ hi under the engine's exact
-    ordering (NULL placement and NaN included).  The bounds live in
-    broadcast DATA, never in the plan, so the plan is byte-stable in
-    n_parts (machine-checked in tests/test_plans.py); the join is a
-    BroadcastNestedLoopJoin costing O(n_parts) comparisons per row
-    (see _resolve_rank_parts for the scale ceiling and escape).
+    (pid, lo…, hi…, unbounded flags) — built by ``local_frame`` (a
+    LocalRelation: no Python worker unpickles it), broadcast and
+    interval-joined: row → the unique pid with lo < key ≤ hi under the
+    engine's exact ordering (NULL placement and NaN included).  The
+    bounds are table ROWS, never plan expressions, so the plan is
+    byte-stable in n_parts (machine-checked in tests/test_plans.py);
+    the join is a BroadcastNestedLoopJoin costing O(n_parts)
+    comparisons per row (see _resolve_rank_parts for the scale ceiling
+    and escape).
 
     The local window downstream (partitionBy ``_adt_pid``) is the ONE
     data shuffle any construction in this family pays.
@@ -1498,7 +1501,7 @@ def _assign_range_pids(
             if extra_vals is not None:
                 row += list(extra_vals[idx])
             rows.append(tuple(row))
-        return spark.createDataFrame(rows, T.StructType(fields))
+        return local_frame(spark, rows, T.StructType(fields))
 
     def _interval_cond(tag: str):
         after_lo = _lex_after_cond(
@@ -1578,12 +1581,14 @@ def _broadcast_pid_join(ranged: DataFrame, rows: list, schema) -> DataFrame:
     """Attach per-pid driver state (offsets / boundary arrays) as a
     ≤ n_parts-row BROADCAST JOIN on ``_adt_pid`` — the round-10
     replacement for the create_map literal patch maps, so boundary
-    state is DATA and the plan stays byte-stable in n_parts.  The
+    state is DATA and the plan stays byte-stable in n_parts.  The rows
+    enter through ``local_frame`` (a LocalTableScan, no Python
+    worker).  The
     first schema column must be ``_adt_jpid int``; the join is inner
     and provably row-preserving (the rows cover every pid the data
     produced — they were derived from it)."""
     spark = ranged.sparkSession
-    state = spark.createDataFrame(rows, schema)
+    state = local_frame(spark, rows, schema)
     return ranged.join(
         F.broadcast(state), F.col("_adt_pid") == F.col("_adt_jpid"), "inner"
     ).drop("_adt_jpid")

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from adt_spark.context import spread
+from adt_spark.context import local_frame, spread
 from adt_spark.operators.dedup import _SHINGLE_SQL
 from adt_spark.queries import register, tables
 
@@ -428,13 +428,13 @@ def text_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     mk = (spark.sparkContext.applicationId, sf_dir)
     memo = _BPE_MERGES_MEMO.get(mk)
     if memo is not None:
-        return spark.createDataFrame(
-            memo, "rank int, left string, right string, pair_count bigint"
+        return local_frame(
+            spark, memo, "rank int, left string, right string, pair_count bigint"
         )
     merges, _rounds = _bpe_train(spark, sf_dir, _BPE_TRAIN_ROUNDS)
     _BPE_MERGES_MEMO[mk] = merges
-    return spark.createDataFrame(
-        merges, "rank int, left string, right string, pair_count bigint"
+    return local_frame(
+        spark, merges, "rank int, left string, right string, pair_count bigint"
     )
 
 

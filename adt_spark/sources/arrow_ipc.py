@@ -5,8 +5,8 @@ crates/core/src/context.rs:42).
 Two paths:
 
 - ``read_arrow_ipc``: driver-side ``pyarrow.ipc`` open →
-  ``spark.createDataFrame`` over the Arrow table (Arrow-optimized
-  conversion).  Right for dimension-sized IPC files.
+  ``local_frame`` over the Arrow table (a ``LocalRelation``, no
+  pandas round trip).  Right for dimension-sized IPC files.
 - ``read_arrow_ipc_distributed``: for large/multi-file IPC datasets —
   lists files, parallelizes (file, batch_range) splits, and decodes
   *inside* ``mapInPandas``-style tasks so no single node materializes
@@ -26,6 +26,8 @@ import pyarrow.ipc
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.pandas.types import from_arrow_schema
+
+from adt_spark.context import local_frame
 
 
 def _ipc_paths(location: str) -> list[str]:
@@ -61,12 +63,9 @@ def read_arrow_ipc(spark: SparkSession, location: str) -> DataFrame:
             reader.read_all() if hasattr(reader, "read_all") else pa.Table.from_batches(list(reader))
         )
     merged = pa.concat_tables(tables)
-    # pin the Spark schema from the ARROW schema: an untyped
-    # to_pandas() round-trip turns int64-with-nulls into float64
-    # (precision loss + a different dtype than the distributed path)
-    return spark.createDataFrame(
-        merged.to_pandas(), schema=from_arrow_schema(merged.schema)
-    )
+    # the Arrow table goes to Spark as is: no pandas round trip, so
+    # int64-with-nulls stays int64 (the distributed path's dtype)
+    return local_frame(spark, merged, from_arrow_schema(merged.schema))
 
 
 def read_arrow_ipc_distributed(spark: SparkSession, location: str) -> DataFrame:
@@ -81,7 +80,7 @@ def read_arrow_ipc_distributed(spark: SparkSession, location: str) -> DataFrame:
     if not paths:
         raise FileNotFoundError(f"no Arrow IPC files at {location}")
     schema = from_arrow_schema(_open_reader(paths[0]).schema)
-    paths_df = spark.createDataFrame([(p,) for p in paths], "path string").repartition(
+    paths_df = local_frame(spark, [(p,) for p in paths], "path string").repartition(
         min(len(paths), 64)
     )
 

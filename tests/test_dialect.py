@@ -193,6 +193,41 @@ def test_global_rank_rewrite_engages_and_matches(spark, sf_dir):
     assert "Window" in plan
 
 
+def test_global_rank_construction_jobs_keep_caller_job_group(spark, sf_dir):
+    """Every job ADTContext.sql starts for q_sql_two_rank_orders —
+    including the bounds samples and state collects the rewrite runs
+    in pool threads — belongs to the caller's job group."""
+    import time
+
+    from adt_spark.context import ADTContext
+    from adt_spark.queries import load_all
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ctx = ADTContext.__new__(ADTContext)
+    ctx.spark = spark
+    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
+        "documents"
+    )
+    sql = load_all()["q_sql_two_rank_orders"].oracle
+    group = "adt-test-two-rank-orders"
+    ungrouped = set(tracker.getJobIdsForGroup())
+    sc.setJobGroup(group, "q_sql_two_rank_orders construction")
+    try:
+        ctx.sql(sql)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # job-start events reach the status store through the listener bus
+    deadline = time.time() + 30
+    while time.time() < deadline and len(tracker.getJobIdsForGroup(group)) < 2:
+        time.sleep(0.2)
+    time.sleep(1.0)
+    assert len(tracker.getJobIdsForGroup(group)) >= 2
+    assert set(tracker.getJobIdsForGroup()) == ungrouped
+
+
 def test_global_rank_rewrite_passthrough_shapes(spark, sf_dir):
     """Out-of-scope shapes must pass through UNTOUCHED (return None)
     — the plain form is correct, merely on the cliff — never be

@@ -147,3 +147,48 @@ def test_keyed_env_kill_switch(spark, monkeypatch):
         )
         is None
     )
+
+
+def test_keyed_star_keeps_base_columns(spark, kw_table):
+    """``SELECT *, <keyed window>``: the star is the base table's
+    columns only — the join-back's ``__kw_*`` columns must not leak
+    into the result."""
+    sql = (
+        "SELECT *, sum(v) OVER (PARTITION BY p ORDER BY k RANGE BETWEEN"
+        " 1 PRECEDING AND CURRENT ROW) AS x FROM kw_matrix_t"
+    )
+    compressed = compress_keyed_windows(sql)
+    assert compressed is not None
+    a, b = spark.sql(sql), spark.sql(compressed)
+    assert b.columns == a.columns == ["rid", "p", "k", "v", "x"]
+    assert a.orderBy("rid").collect() == b.orderBy("rid").collect()
+
+
+def test_keyed_refuses_star_over_dense_rank_wrap(spark):
+    """Form B's ``*`` also carries the injected ``__adt_drN`` column,
+    which the compressed statement does not join back."""
+    assert (
+        compress_keyed_windows(
+            "SELECT *, sum(v) OVER (PARTITION BY p ORDER BY __adt_dr0 RANGE"
+            " BETWEEN 1 PRECEDING AND CURRENT ROW) AS x FROM (SELECT *,"
+            " dense_rank() OVER (PARTITION BY p ORDER BY k NULLS LAST) AS"
+            " __adt_dr0 FROM kw_matrix_t) w"
+        )
+        is None
+    )
+
+
+@pytest.mark.parametrize("fn", ["first_value", "last_value"])
+def test_keyed_refuses_first_last_of_injected_index(spark, fn):
+    """A first/last argument naming the injected ``__adt_drN`` would
+    become a per-key partial over the base table, which has no such
+    column — refused."""
+    assert (
+        compress_keyed_windows(
+            f"SELECT rid, {fn}(__adt_dr0) OVER (PARTITION BY p ORDER BY"
+            " __adt_dr0 RANGE BETWEEN 1 PRECEDING AND CURRENT ROW) AS x FROM"
+            " (SELECT *, dense_rank() OVER (PARTITION BY p ORDER BY k NULLS"
+            " LAST) AS __adt_dr0 FROM kw_matrix_t) w"
+        )
+        is None
+    )

@@ -1460,15 +1460,33 @@ def test_sql_global_offsets_no_single_partition_window(spark, sf_dir):
     assert "SinglePartition" not in plan
 
 
+def _assert_state_local(plan: str, name: str) -> None:
+    """The global-window family's driver-built state (pid bounds and
+    per-pid state) enters as at least one LocalTableScan, and every
+    LocalTableScan carries only _adt_* columns."""
+    scans = re.findall(
+        r"\(\d+\) LocalTableScan\s*\n"
+        r"Output \[\d+\]: \[([^\]]*)\]",
+        plan,
+    )
+    assert scans, name
+    for cols in scans:
+        assert all(c.strip().startswith("_adt_") for c in cols.split(",")), (
+            name, cols
+        )
+
+
 def test_global_window_family_plan_flat_in_n_parts(spark, sf_dir):
     """Round-10: the two-phase global-window family's partition
     bounds, prefix offsets, and boundary arrays are broadcast DATA
-    (createDataFrame + pid join), never plan literals — 8× the
-    partition count must leave the optimized plan byte-comparable
+    (local_frame LocalRelation + pid join), never plan literals — 8×
+    the partition count must leave the optimized plan byte-comparable
     (the round-9 construction embedded O(n_parts·j) create_map
     literals).  And nothing O(data) may materialize: no Scan
     ExistingRDD anywhere (the round-9 construction localCheckpointed
-    the whole range-partitioned corpus per query)."""
+    the whole range-partitioned corpus per query; the driver-built
+    state tables are LocalTableScans, so no Python worker unpickles
+    them)."""
     from pyspark.sql import functions as F
 
     from adt_spark.operators.sampling import (
@@ -1544,15 +1562,11 @@ def test_global_window_family_plan_flat_in_n_parts(spark, sf_dir):
         p64 = _formatted(build(64))
         # the corpus reaches the window straight from the parquet scan
         # (the round-9 localCheckpoint replaced it with a materialized
-        # RDD scan); the only ExistingRDD scans allowed are the tiny
-        # _adt_* broadcast state tables (createDataFrame plans as one)
+        # RDD scan); the _adt_* broadcast state tables enter as
+        # LocalTableScans (local_frame), never as an RDD scan
         assert "Scan parquet" in p8, name
-        for m in re.finditer(
-            r"\(\d+\) Scan ExistingRDD(?:\s*\[codegen[^\]]*\])?\s*\n"
-            r"Output \[\d+\]: \[([^\]]*)\]",
-            p8,
-        ):
-            assert "_adt_" in m.group(1), (name, m.group(1))
+        assert "Scan ExistingRDD" not in p8, name
+        _assert_state_local(p8, name)
         assert "SinglePartition" not in p8, name
         assert re.search(r"\(\d+\) Window\b", p8), name
         assert abs(len(p64) - len(p8)) <= 0.02 * len(p8), (
@@ -1604,18 +1618,14 @@ def test_sql_moving_agg_no_single_partition(spark, sf_dir):
     """q_sql_moving_agg (round-11, r10 verdict #2): bounded explicit
     ROWS frames through the dialect rewrite — partitioned Windows
     only, no SinglePartition exchange, corpus reaches the windows
-    from the parquet scan, boundary state enters as broadcast joins
-    (no non-_adt_ ExistingRDD scans)."""
+    from the parquet scan, boundary state enters as broadcast joins of
+    LocalTableScans (no ExistingRDD scan at all)."""
     plan = _formatted(_q(spark, sf_dir, "q_sql_moving_agg"))
     assert re.search(r"\(\d+\) Window\b", plan)
     assert "SinglePartition" not in plan
     assert "Scan parquet" in plan
-    for m in re.finditer(
-        r"\(\d+\) Scan ExistingRDD(?:\s*\[codegen[^\]]*\])?\s*\n"
-        r"Output \[\d+\]: \[([^\]]*)\]",
-        plan,
-    ):
-        assert "_adt_" in m.group(1), m.group(1)
+    assert "Scan ExistingRDD" not in plan
+    _assert_state_local(plan, "q_sql_moving_agg")
 
 
 def test_sql_two_rank_orders_no_single_partition(spark, sf_dir):

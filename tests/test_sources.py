@@ -124,3 +124,82 @@ def test_delta_gated(spark):
 def test_url_table_sugar(spark, sf_dir):
     name = path_sql_name(os.path.join(sf_dir, "region.parquet"), "parquet")
     assert spark.sql(f"select count(*) from {name}").first()[0] == 5
+
+
+def _local_frame_schema():
+    from pyspark.sql import types as T
+
+    return T.StructType(
+        [
+            T.StructField("i", T.IntegerType()),
+            T.StructField("b", T.LongType()),
+            T.StructField("d", T.DoubleType()),
+            T.StructField("m", T.DecimalType(12, 2)),
+            T.StructField("s", T.StringType()),
+            T.StructField("o", T.BooleanType()),
+            T.StructField("dt", T.DateType()),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("tsa", T.ArrayType(T.TimestampType())),
+        ]
+    )
+
+
+@pytest.mark.parametrize("host_tz", ["UTC", "America/New_York"])
+def test_local_frame_matches_list_path(spark, monkeypatch, host_tz):
+    """local_frame collects exactly what createDataFrame(list) does on
+    the same rows — NULLs, decimals, dates and (naive, aware and
+    nested) timestamps included, under any host time zone — and plans
+    as a LocalTableScan, never an RDD scan."""
+    import datetime as dt
+    import decimal
+    import time
+
+    from adt_spark.context import local_frame
+
+    monkeypatch.setenv("TZ", host_tz)
+    time.tzset()
+    try:
+        utc = dt.timezone.utc
+        rows = [
+            (1, 2**40, 1.5, decimal.Decimal("12.34"), "x", True,
+             dt.date(2020, 1, 2), dt.datetime(2020, 3, 8, 2, 30),
+             [dt.datetime(2021, 1, 1), None]),
+            (None,) * 9,
+            (-5, -1, -0.0, decimal.Decimal("-1.00"), "ü", False,
+             dt.date(1900, 1, 1),
+             dt.datetime(1969, 12, 31, 23, 59, 59, 999999, tzinfo=utc), []),
+        ]
+        schema = _local_frame_schema()
+        got = local_frame(spark, rows, schema)
+        assert got.collect() == spark.createDataFrame(rows, schema).collect()
+        assert got.schema == schema
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+
+
+def test_local_frame_ddl_dicts_and_empty(spark):
+    from adt_spark.context import local_frame
+
+    ddl = "k string, v bigint"
+    rows = [{"v": 2, "k": "a"}, {"k": None, "v": None}]
+    assert local_frame(spark, rows, ddl).collect() == spark.createDataFrame(
+        rows, ddl
+    ).collect()
+    empty = local_frame(spark, [], ddl)
+    assert empty.collect() == [] and empty.columns == ["k", "v"]
+
+
+def test_local_frame_verifies_rows(spark):
+    """The list path's per-row schema verification is kept."""
+    from pyspark.sql import types as T
+
+    from adt_spark.context import local_frame
+
+    strict = T.StructType([T.StructField("x", T.IntegerType(), False)])
+    with pytest.raises(ValueError, match="not nullable"):
+        local_frame(spark, [(1,), (None,)], strict)
+    with pytest.raises(TypeError):
+        local_frame(spark, [("a",)], "x int")
