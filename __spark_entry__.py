@@ -37,6 +37,8 @@ def _prepare(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    # build_session's codegen cache cap is a static conf: a running
+    # session cannot take it, so this session keeps Spark's default.
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -62,6 +62,17 @@ def build_session(
     you'd ship to a 1000-executor cluster: AQE for runtime re-plan +
     skew handling, UTC session timezone (oracle comparability and
     cross-cluster determinism), Arrow at the Python boundary.
+
+    The codegen cache holds 4096 compiled classes (Spark's default is
+    100).  Measured working sets: one ``sql_windows`` benchmark pass
+    generates 154 distinct classes, one ``delta_llm_pipeline`` pass 83,
+    and a cold run of all 243 registered ``spark_fn`` builders 2792
+    (sf0.001 benchmark data, ``local[2]``).  At 100 a warm window pass
+    recompiled 95 to 154 of its classes, by statement order.
+    The cap is a static conf, read when the JVM first generates code:
+    a session built elsewhere (``ADTContext(spark=...)``, the plain
+    session ``__spark_entry__`` is handed) keeps the cap it was built
+    with.  ``extra_conf`` overrides it like any other conf.
     """
     cpus = _default_parallelism()
     master = master or f"local[{cpus}]"
@@ -92,6 +103,14 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
+        # JVM-wide LRU of compiled codegen classes (Spark default 100).
+        # Sized from measured traffic: one sql_windows pass generates
+        # 154 distinct classes and cycles through them, so at 100 every
+        # warm pass recompiled most of them.  A cold sweep of all 243
+        # registered spark_fn builders compiled 2792 distinct classes
+        # and grew metaspace from 122 to 195 MB (about 26 KB a class),
+        # so 4096 holds the whole corpus in roughly 110 MB of metaspace.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
@@ -132,6 +151,10 @@ def _configure_s3_from_env(spark: SparkSession) -> None:
 class ADTContext:
     """The engine's session object: SparkSession + table registration
     + SQL entry point (reference: ADTContext, context.rs:17-105).
+
+    With ``spark=None`` the session comes from ``build_session``.  A
+    passed-in session is used as it is: its static confs, the codegen
+    cache cap among them, stay whatever it was built with.
     """
 
     def __init__(
@@ -235,11 +258,18 @@ class ADTContext:
         row counting — results are produced and discarded exactly like
         DataFusion's ANALYZE, never serialized to Python), which
         populates the SQLMetrics on the executed plan instance.
+
+        The last line counts the codegen classes compiled while the
+        plan ran.  Spark's counter is JVM-wide, so a concurrent
+        statement's compiles are counted too.
         """
         df = self.sql(inner, args=args)
         qe = df._jdf.queryExecution()
         plan = qe.executedPlan()
+        codegen = self.spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        compiled0 = codegen.METRIC_COMPILATION_TIME().getCount()
         plan.execute().count()  # full execution, metrics accumulate
+        compiled = codegen.METRIC_COMPILATION_TIME().getCount() - compiled0
         lines = [plan.toString()]
         lines.append("")
         lines.append("Metrics:")
@@ -268,6 +298,8 @@ class ADTContext:
                 walk(kids.apply(i), depth + 1)
 
         walk(plan, 0)
+        lines.append("")
+        lines.append(f"Codegen: {compiled} classes compiled (JVM-wide counter)")
         return local_frame(
             self.spark, [("Plan with Metrics", "\n".join(lines))], "plan_type string, plan string"
         )

@@ -77,13 +77,15 @@ the fallback here is pass-through, never an error.
 from __future__ import annotations
 
 import itertools
-import os
+import logging
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from adt_spark.dialect.window_frames import _mask_literals, _match_paren
+
+_log = logging.getLogger("adt_spark.dialect")
 
 __all__ = ["maybe_rewrite_global_rank"]
 
@@ -1077,9 +1079,11 @@ def maybe_rewrite_global_rank(spark: SparkSession, sql: str) -> DataFrame | None
         # a shape the textual scope check admitted but Spark cannot
         # evaluate in this position (ambiguous columns from a join FROM
         # body, aliases as keys, …) — fall back to the native path,
-        # whose own analysis raises the real error
-        if os.environ.get("ADT_DEBUG_GLOBAL_RANK"):
-            raise  # debugging aid: surface the real construction error
+        # whose own analysis raises the real error if there is one
+        _log.warning(
+            "global-window rewrite fell back to the native plan: "
+            "construction failed", exc_info=True,
+        )
         return None
     view = f"_adt_global_rank_{next(_view_counter)}"
     ranked.createOrReplaceTempView(view)

@@ -34,8 +34,11 @@ Per-function equivalence (the pass refuses anything else):
   keep their type exactly.  DECIMAL sums widen their declared
   precision a second time (p+10 → p+20, capped 38) — VALUES are
   identical unless the single-level sum would overflow to NULL where
-  the two-level one still fits; same disclosure family as
-  ``rewrite_window_frames``'s subtraction RuntimeWarning.
+  the two-level one still fits.  FLOATING-POINT sums are reassociated
+  (per-key partials, then the frame), so low-order bits can differ.
+  A textual pass cannot see the argument's type, so the first
+  compressed ``sum`` in a process emits a RuntimeWarning, the same
+  disclosure family as ``rewrite_window_frames``'s subtraction one.
 - ``count(e)`` / ``count(*)`` → ``COALESCE(sum(per-key count), 0)``:
   count over an empty frame is 0, sum over an empty frame is NULL —
   the COALESCE restores count's never-NULL contract.
@@ -87,6 +90,7 @@ from __future__ import annotations
 
 import os
 import re
+import warnings
 
 from adt_spark.dialect.window_frames import (
     _OVER_RE,
@@ -144,6 +148,28 @@ _WRAP_RE = re.compile(
     r"\s*\)\s*[A-Za-z_][\w]*$",
     re.IGNORECASE,
 )
+
+
+_sum_warned = False
+
+
+def _warn_two_level_sum_once() -> None:
+    """One-time heads-up that a compressed ``sum`` was emitted as a
+    sum of per-key partial sums (module docstring, ``sum(e)``)."""
+    global _sum_warned
+    if _sum_warned:
+        return
+    _sum_warned = True
+    warnings.warn(
+        "keyed-window compression: evaluating sum() as a sum of per-key "
+        "partial sums; results are exact for integer/decimal arguments "
+        "but may differ in low-order bits for floating-point ones "
+        "(the additions are reassociated), and DECIMAL sum widens its "
+        "declared precision a second time (see "
+        "adt_spark/dialect/keyed_windows.py docstring)",
+        RuntimeWarning,
+        stacklevel=3,
+    )
 
 
 def _depths(masked: str) -> list[int]:
@@ -370,6 +396,8 @@ def compress_keyed_windows(sql: str) -> str | None:
             f"(SELECT *, dense_rank() OVER (PARTITION BY {part_col} "
             f"ORDER BY {key_col} NULLS LAST) AS {dr_name} FROM ({grp})) __kw_g"
         )
+    if any(call[2] == "sum" for call in calls):
+        _warn_two_level_sum_once()
     win = (
         f"SELECT {part_col} AS __kw_jp, {key_col} AS __kw_jk, "
         f"{', '.join(win_sql)} FROM {win_src}"

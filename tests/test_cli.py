@@ -4,6 +4,7 @@ main.rs:72, schema output main.rs:99, script execution main.rs:103-137)."""
 from __future__ import annotations
 
 import os
+import re
 
 from adt_spark.cli import main
 
@@ -152,6 +153,7 @@ def test_explain_analyze_runs_and_reports_metrics(spark, sf_dir):
     assert "Metrics:" in plan
     assert "numOutputRows=" in plan            # runtime metric values
     assert "HashAggregate" in plan
+    assert re.search(r"^Codegen: \d+ classes compiled \(JVM-wide", plan, re.M)
 
 
 def test_cli_queries_lists_registry(capsys):

@@ -4,6 +4,7 @@ shims for DataFusion function names (SURVEY.md §2.B gaps)."""
 from __future__ import annotations
 
 import datetime
+import logging
 
 import pytest
 
@@ -269,6 +270,29 @@ def test_global_rank_rewrite_passthrough_shapes(spark, sf_dir):
         "FROM documents WHERE lang > min(",
     ):
         assert maybe_rewrite_global_rank(spark, q) is None, q
+
+
+def test_global_rank_construction_fallback_logs_warning(spark, sf_dir, caplog):
+    """A self-join FROM body passes the textual scope check, but its
+    ambiguous columns break the rewrite's construction: the statement
+    falls back to the native plan, returns the native rows, and logs
+    the failure once at WARNING on ``adt_spark.dialect``."""
+    from adt_spark import ADTContext
+
+    ctx = ADTContext(spark=spark)
+    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
+        "documents"
+    )
+    q = (
+        "SELECT a.doc_id, row_number() OVER (ORDER BY a.doc_id) r "
+        "FROM documents a JOIN documents b ON a.doc_id = b.doc_id"
+    )
+    with caplog.at_level(logging.WARNING, logger="adt_spark.dialect"):
+        got = ctx.sql(q).orderBy("r").collect()
+    assert got == spark.sql(q).orderBy("r").collect()
+    records = [r for r in caplog.records if r.name == "adt_spark.dialect"]
+    assert [r.levelno for r in records] == [logging.WARNING]
+    assert records[0].exc_info is not None
 
 
 def test_global_rank_rewrite_widened_scope(spark, sf_dir):

@@ -13,6 +13,8 @@ and the dense_rank wrap (form B)."""
 
 from __future__ import annotations
 
+import warnings
+
 import pytest
 
 from adt_spark.dialect.keyed_windows import compress_keyed_windows
@@ -192,3 +194,24 @@ def test_keyed_refuses_first_last_of_injected_index(spark, fn):
         )
         is None
     )
+
+
+def test_keyed_sum_warns_reassociation_once(monkeypatch):
+    """A compressed ``sum`` is a sum of per-key partial sums, which
+    reassociates floating-point additions: the first one in a process
+    emits a RuntimeWarning, a later one does not, and a compression
+    without ``sum`` (count's partials are integers) emits none."""
+    from adt_spark.dialect import keyed_windows
+
+    monkeypatch.setattr(keyed_windows, "_sum_warned", False)
+    frame = "OVER (PARTITION BY p ORDER BY k RANGE BETWEEN 1 PRECEDING AND CURRENT ROW)"
+    count_sql = f"SELECT rid, count(v) {frame} AS x FROM kw_matrix_t"
+    sum_sql = f"SELECT rid, sum(v) {frame} AS x FROM kw_matrix_t"
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert compress_keyed_windows(count_sql) is not None
+    with pytest.warns(RuntimeWarning, match="per-key partial sums"):
+        assert compress_keyed_windows(sum_sql) is not None
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert compress_keyed_windows(sum_sql) is not None
